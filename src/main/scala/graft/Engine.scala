@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 
 /** Session factory + table catalog for the graft engine.
   *
@@ -42,12 +43,34 @@ object Engine {
 /** Loaders for the harness's parquet star schema (TESTDATA.md). Each table is
   * one parquet directory under the scale-factor dir. Column pruning and
   * predicate pushdown reach the scan because these return raw relations —
-  * callers compose select/filter lazily. */
+  * callers compose select/filter lazily.
+  *
+  * [[read]] is the one owner of parquet table reads in `src/main`
+  * (SourceLintSpec keeps it so). It resolves the schema from one footer
+  * on the driver, with no Spark job. In the reference that schema comes
+  * from the metastore, registered once (README.md:394–410, see
+  * [[graft.operators.Sinks.registerExternalTable]]); Spark's own inference
+  * instead runs one job per read, even for its one footer. The footer is
+  * read again on every call, so a rewritten table is never served a stale
+  * schema. */
 object Tables {
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 
+  /** `spark.read.parquet(path)` with the schema Spark would infer, read
+    * from one footer on the driver: `_common_metadata`, else `_metadata`,
+    * else the first data file in path order, as Spark's mergeSchema-off
+    * inference picks (GraftParquetFooter). Spark infers instead, with its
+    * job, when `spark.sql.parquet.mergeSchema` is on, when the path is a
+    * glob, or when no footer is found — so an empty or missing path fails
+    * exactly as before. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    GraftParquetFooter.inferSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
 
   /** Widen a scan-rooted frame to the session's shuffle width for
     * CPU-shaped map stages (r13 optimization, guide §2.5/§6 parallelism
@@ -121,7 +144,7 @@ object Tables {
   def eventsStream(s: SparkSession, d: String): DataFrame = {
     nanosAsLong(s)
     val path = s"$d/events.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = read(s, path).schema
     // The file stream source requires a directory; the harness table is a
     // single file. Stage a symlink dir (idempotent, no data copy).
     import java.nio.file.{Files, Paths}

@@ -370,7 +370,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
       val report = graft.operators.Compaction.compactAndPublish(
         spark, table, "event_type", bucketKey = "event_id",
         targetFileBytes = 64L << 20, stagingDir = s"$work/staging")
-      val published = spark.read.parquet(table)
+      val published = Tables.read(spark, table)
       val idHash = graft.functions.PortableHashFunctions
         .md5_token_hashes(array(col("event_id").cast("string")), bits = 31)
         .getItem(0)
@@ -1416,7 +1416,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
         ()
       }
       rollupIngest(s, staged.toString, rollup, s"$work/_checkpoint")
-      spark.read.parquet(rollup)
+      Tables.read(spark, rollup)
         .groupBy(col("day"), col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("value_cents")).as("value_cents"))
         .orderBy(col("day"), col("event_type"))
@@ -1470,7 +1470,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
       .withColumn("route_rank", col("r0") + 1)
       .withColumn("q_rvec", IvfPqIndex.residual(idx.cellMatrix)(col("embedding"), col("cell")))
     val codes = IvfPqIndex.codeSegments(spark, idx)
-      .map(seg => spark.read.parquet(seg))
+      .map(seg => Tables.read(spark, seg))
       .reduce(_.unionByName(_))
       .select(col("neighbor_id"), col("cell"),
         transform(col("codes"),
@@ -1515,7 +1515,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
   private[graft] def rollupIngest(s: SparkSession, staged: String,
       rollup: String, checkpoint: String): Unit = {
     val stream = s.readStream
-      .schema(s.read.parquet(staged).schema)
+      .schema(Tables.read(s, staged).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
     val t0 = System.currentTimeMillis()
@@ -2301,7 +2301,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
         .select(col("doc_id"), col("text"))
         .write.parquet(staged)
       val stream = s.readStream
-        .schema(s.read.parquet(staged).schema)
+        .schema(Tables.read(s, staged).schema)
         .parquet(staged)
       val t0 = System.currentTimeMillis()
       val q = graft.dedup.IncrementalDedup.streamingIngest(
@@ -2309,7 +2309,7 @@ trait PipelineQueriesP1 { this: PipelineQueries.type =>
         fpCol = TextAnalysis.tokenSetKey(col("text")),
         checkpoint = s"$work/_checkpoint")
       graft.StreamLog.await(t0, q)
-      spark.read.parquet(corpus)
+      Tables.read(spark, corpus)
         .where(col("batch_id") >= 0)
         .select(col("doc_id"), col("fp"))
         .orderBy(col("doc_id"))

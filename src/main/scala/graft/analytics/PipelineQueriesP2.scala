@@ -1791,7 +1791,7 @@ trait PipelineQueriesP2 { this: PipelineQueries.type =>
       events
         .join(broadcast(tombstones), Seq("user_id"), "left_anti")
         .write.parquet(s"$work/events_purged")
-      val after = spark.read.parquet(s"$work/events_purged")
+      val after = Tables.read(spark, s"$work/events_purged")
       val idHash = graft.functions.PortableHashFunctions
         .md5_token_hashes(array(col("event_id").cast("string")), bits = 31)
         .getItem(0)

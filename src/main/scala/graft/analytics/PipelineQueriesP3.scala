@@ -514,7 +514,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
   def streamingFuzzyDedup(spark: SparkSession, dir: String): DataFrame = {
     graft.SessionMemo.memo(spark, s"q200|$dir") {
       val corpus = fuzzyIngestCorpus(spark, dir)
-      spark.read.parquet(corpus)
+      Tables.read(spark, corpus)
         .where(col("batch_id") >= 0)
         .select(col("batch_id").cast("long").as("batch_id"), col("doc_id"))
         .orderBy(col("batch_id"), col("doc_id"))
@@ -562,7 +562,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     graft.SessionMemo.memo(spark, s"q256|$dir") {
       val corpus = fuzzyIngestCorpus(spark, dir)
       graft.dedup.IncrementalDedup.compactSigStore(spark, corpus)
-      spark.read.parquet(s"$corpus/_fuzzy_sigs/_base")
+      Tables.read(spark, s"$corpus/_fuzzy_sigs/_base")
         .agg(countDistinct(col("batch_id")).as("n_folded_partitions"),
           countDistinct(col("band_idx")).as("n_bands"),
           count(lit(1)).as("n_rows"),
@@ -1769,7 +1769,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
     val embs = Tables.embeddings(spark, dir)
     val idx = IvfPqIndex.ensure(spark, embs, "vec_id", "embedding")
     val nlist = idx.cellMatrix.length.toLong
-    val occ = spark.read.parquet(s"${idx.location}/codes")
+    val occ = Tables.read(spark, s"${idx.location}/codes")
       .select(col("cell").cast("long").as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
     val full = spark.range(0L, nlist).select(col("id").as("cell"))
@@ -2073,7 +2073,7 @@ trait PipelineQueriesP3 { this: PipelineQueries.type =>
       val work = java.nio.file.Files.createTempDirectory("graft_admit_store").toString
       graft.similarity.SemDedup.committedAdmission(
         s, Tables.embeddings(s, dir), "vec_id", "embedding", s"$work/admitted")
-      spark.read.parquet(s"$work/admitted")
+      Tables.read(spark, s"$work/admitted")
         .select(col("batch_id").cast("long").as("batch"),
           col("id").as("vec_id"), col("cell"))
         .orderBy(col("batch"), col("vec_id"))

@@ -118,7 +118,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
       val boilerKeys = boiler.groupBy(col("segh")).agg(sum(col("n_docs")).as("df"))
         .filter(col("df") >= BoilerMinDocs).select(col("segh"))
       val perDoc = docSegments(
-        spark.read.parquet(corpus)
+        Tables.read(spark, corpus)
           .select(col("doc_id"), col("source"), col("text"))
           .join(gated, Seq("doc_id"), "left_semi"))
         .join(broadcast(boilerKeys.withColumn("is_b", lit(1L))), Seq("segh"), "left")
@@ -140,7 +140,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
           Seq("band_idx", "band_key"))
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b")).distinct()
-      val toks = spark.read.parquet(corpus).select(col("doc_id"),
+      val toks = Tables.read(spark, corpus).select(col("doc_id"),
         sort_array(array_distinct(graft.text.TextAnalysis.tokens(col("text")))).as("toks"))
       val dominated = cand
         .join(toks.select(col("doc_id").as("id_a"), col("toks").as("ta")), Seq("id_a"))
@@ -179,7 +179,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
       // feed both exceptAll directions, so they persist for the one
       // unioned count (round-11 verdict #4: unpersisted, each lineage
       // used to execute twice).
-      val derived1 = spark.read.parquet(corpus)
+      val derived1 = Tables.read(spark, corpus)
         .where(col("batch_id") === 1L)
         .select(col("doc_id").cast("long").as("sid"),
           posexplode(graft.dedup.Dedup.bandKeysOf(
@@ -1307,7 +1307,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         .write.parquet(staged)
       val decisions = s"$work/decisions"
       val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema).parquet(staged)
+      val q = s.readStream.schema(Tables.read(s, staged).schema).parquet(staged)
         .writeStream
         .option("checkpointLocation", s"$work/_checkpoint")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1326,7 +1326,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         }
         .start()
       graft.StreamLog.await(t0, q)
-      spark.read.parquet(decisions)
+      Tables.read(spark, decisions)
         .select(col("doc_id"), col("source"), col("n_segments"), col("n_boiler"),
           col("boiler_bp"), col("admitted"))
         .orderBy(col("doc_id"))
@@ -1457,9 +1457,12 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         p
       })
 
+  /** `memoPerEpoch` takes its frame BY NAME: building it runs the
+    * EpochCount GlobalRank calls (a range-exchange job and a persisted
+    * sharding each), so a memo hit must never evaluate it. */
   private[graft] def epochScheduleOf(docs: DataFrame,
       memoShards: DataFrame => DataFrame = identity,
-      memoPerEpoch: DataFrame => DataFrame = identity): DataFrame = {
+      memoPerEpoch: (=> DataFrame) => DataFrame = pe => pe): DataFrame = {
     import graft.functions.PortableHashFunctions.md5_token_hashes
     import graft.operators.GlobalRank.rowNumber
     // r13 optimization (guide §2.4): PERSIST the shard frame — it feeds
@@ -1749,7 +1752,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         .write.parquet(staged)
       val store = s"$work/partials"
       val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema)
+      val q = s.readStream.schema(Tables.read(s, staged).schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
         .writeStream
         .option("checkpointLocation", s"$work/_checkpoint")
@@ -1765,7 +1768,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         }
         .start()
       graft.StreamLog.await(t0, q)
-      decayedFold(spark.read.parquet(store)
+      decayedFold(Tables.read(spark, store)
         .groupBy(col("user_id"), col("hour_id")).agg(sum(col("n")).as("n")))
     }
 
@@ -2934,7 +2937,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         .write.parquet(staged)
       val decisions = s"$work/decisions"
       val t0 = System.currentTimeMillis()
-      val q = s.readStream.schema(s.read.parquet(staged).schema).parquet(staged)
+      val q = s.readStream.schema(Tables.read(s, staged).schema).parquet(staged)
         .writeStream
         .option("checkpointLocation", s"$work/_checkpoint")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -2947,7 +2950,7 @@ trait PipelineQueriesP4 { this: PipelineQueries.type =>
         }
         .start()
       graft.StreamLog.await(t0, q)
-      spark.read.parquet(decisions)
+      Tables.read(spark, decisions)
         .select(col("doc_id"), col("source"), col("nbg"), col("s_sum"),
           col("avg_q8"), col("admitted"))
         .orderBy(col("doc_id"))

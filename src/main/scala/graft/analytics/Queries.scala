@@ -386,7 +386,7 @@ object Queries {
         .filter(f => f.getName.endsWith(".parquet")).head
       Files.copy(part.toPath, sentinelFile)
     }
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.read(s, s"$dir/events.parquet").schema
     val ev = Tables.normalizeTs(
       s.readStream.schema(schema).parquet(stage.toString))
     val sessions = graft.streaming.StreamPipeline.sessionizeTws(

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Incremental dedup against an EXISTING corpus snapshot — the ingest-time
   * shape of deduplication at 100 TB: when new data arrives, you do not
   * re-join it against the full corpus; the corpus compresses once into a
@@ -190,7 +192,7 @@ object IncrementalDedup {
         val spark = batch.sparkSession
         if (sketch == null || sinceRefresh >= refreshEvery) {
           if (cachedKeys != null) cachedKeys.unpersist()
-          cachedKeys = spark.read.parquet(corpusDir)
+          cachedKeys = Tables.read(spark, corpusDir)
             .where(col("batch_id") < batchId)
             .select(col("fp"))
             .distinct()
@@ -215,7 +217,7 @@ object IncrementalDedup {
         // pruned read of the new directories), own batch excluded either
         // way so a replay re-derives identical survivors.
         val others = cachedKeys
-          .unionByName(spark.read.parquet(corpusDir)
+          .unionByName(Tables.read(spark, corpusDir)
             .where(col("batch_id") >= refreshAtBatch && col("batch_id") =!= batchId)
             .select(col("fp")))
         // 1. min-id keeper per fingerprint within the batch.
@@ -284,7 +286,7 @@ object IncrementalDedup {
   /** Signature store `_fuzzy_sigs` — one row per (doc, band): the LSH
     * bucket keys of every standing-corpus doc, partitioned by batch_id
     * to mirror the corpus partitions. Underscore-prefixed so corpus
-    * reads (`spark.read.parquet(corpusDir)`) never see it (the parquet
+    * reads (`Tables.read(spark, corpusDir)`) never see it (the parquet
     * convention for `_SUCCESS`/`_metadata`). A `_partition_state` digest
     * file records WHICH corpus partition content each store partition
     * reflects — consistency is structural, not trusted. */
@@ -467,7 +469,7 @@ object IncrementalDedup {
     val state = readState(fs, corpusDir)
     if (!baseValid(fs, corpusDir, state, manifest)) deltas
     else {
-      val base = spark.read.parquet(baseDir(corpusDir))
+      val base = Tables.read(spark, baseDir(corpusDir))
         .select(col("sid"), col("band_idx").cast("int").as("band_idx"),
           col("band_key"), col("batch_id"))
       val residual = (state.keySet -- manifest.keySet).toSeq
@@ -510,7 +512,7 @@ object IncrementalDedup {
     (prev.keySet -- current.keySet)
       .foreach(b => clearBatchPartition(spark, sigDir(corpusDir), b))
     current.filter { case (b, d) => !prev.get(b).contains(d) }.keys.foreach { b =>
-      val slice = spark.read.parquet(corpusDir)
+      val slice = Tables.read(spark, corpusDir)
         .where(col("batch_id") === b)
         .select(col(idCol), col(textCol))
       writeSigPartition(toksOf(slice, idCol, textCol), corpusDir, b)
@@ -576,7 +578,7 @@ object IncrementalDedup {
       // unpersisted, the store-join lineage executes twice.
       .persist()
     val stdToks = toksOf(
-      spark.read.parquet(corpusDir)
+      Tables.read(spark, corpusDir)
         .where(col("batch_id") =!= batchId)
         .select(col(idCol), col(textCol))
         .join(candPairs.select(col("std_sid").cast("long").as(idCol)).distinct(),

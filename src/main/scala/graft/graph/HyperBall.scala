@@ -34,6 +34,7 @@ class RegMaxAggregator(m: Int)
   override def reduce(buf: Array[Byte], v: Array[Byte]): Array[Byte] =
     if (buf.length == 0) v.clone()
     else {
+      require(v.length == m, s"register vector has ${v.length} bytes, expected m=$m")
       var i = 0
       while (i < m) { if (v(i) > buf(i)) buf(i) = v(i); i += 1 }
       buf

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Small-file compaction + validated snapshot publish — the lake
   * maintenance every partitioned-parquet deployment runs on a schedule:
   * streaming sinks and frequent small batch appends fragment each
@@ -111,7 +113,7 @@ object Compaction {
     // the rows, bucket deterministically, cluster one shuffle wide enough
     // that same-partition buckets rarely collide (collisions only merge).
     val planDf = broadcast(targets.toDF(partCol, "n_target"))
-    val src = spark.read.parquet(table)
+    val src = Tables.read(spark, table)
     src
       .join(planDf, Seq(partCol))
       .withColumn("bucket", pmod(xxhash64(col(bucketKey)), col("n_target")))
@@ -121,7 +123,7 @@ object Compaction {
 
     // 3. Gate: staged content must equal the source exactly, per partition.
     val gate = contentSummary(src, partCol).as("a")
-      .join(contentSummary(spark.read.parquet(stagingDir), partCol).as("b"), Seq(partCol), "full")
+      .join(contentSummary(Tables.read(spark, stagingDir), partCol).as("b"), Seq(partCol), "full")
       .select(col(partCol),
         (col("a.n_rows") <=> col("b.n_rows")).as("rows_ok"),
         (col("a.content_sum") <=> col("b.content_sum")).as("content_ok"))
@@ -137,7 +139,7 @@ object Compaction {
     val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
-      spark.read.parquet(stagingDir)
+      Tables.read(spark, stagingDir)
         .write.partitionBy(partCol).mode("overwrite").parquet(table)
     finally mode match {
       case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)

@@ -29,9 +29,14 @@ import org.apache.spark.sql.functions._
   * equality — but the big sort runs `shards`-wide in parallel and no
   * executor ever materializes more than ~1/shards of the frame.
   *
-  * REQUIREMENT: `order` must be a TOTAL order (include a unique
-  * tiebreaker column) — equal full keys would make block-local ranks
-  * nondeterministic across retries.
+  * REQUIREMENTS:
+  *   - `order` must be a TOTAL order (include a unique tiebreaker
+  *     column) — equal full keys would make block-local ranks
+  *     nondeterministic across retries.
+  *   - [[prefixMax]] and [[prefixSums]] value columns must be LongType:
+  *     their driver-side carry-ins read shard aggregates as Long. Any
+  *     other type fails up front with an IllegalArgumentException naming
+  *     the column.
   */
 object GlobalRank {
 
@@ -43,6 +48,15 @@ object GlobalRank {
     scala.util.Try(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
       .toOption.filter(_ > 0).getOrElse(200)
+
+  /** The LongType contract of the driver-side carry-ins, checked at
+    * analysis (no job) so a wrong type names its column instead of
+    * surfacing as a ClassCastException from inside a collect. */
+  private def requireLong(df: DataFrame, valCol: Column, op: String): Unit = {
+    val t = df.select(valCol).schema.head.dataType
+    require(t == org.apache.spark.sql.types.LongType,
+      s"GlobalRank.$op: value column $valCol is $t; it must be LongType (cast it)")
+  }
 
   /** Adds `outCol` = row_number() over (ORDER BY `order`…), computed with
     * a `shards`-way range exchange instead of a single-partition sort. */
@@ -122,9 +136,11 @@ object GlobalRank {
     * sort: both frames share one window spec, so Spark evaluates them in
     * a single WindowExec with no extra exchange.
     *
-    * REQUIREMENT: `orderCol` must be numeric (RANGE frame arithmetic). */
+    * REQUIREMENTS: `orderCol` must be numeric (RANGE frame arithmetic);
+    * `valCol` must be LongType. */
   def prefixMax(df: DataFrame, orderCol: Column, valCol: Column, outCol: String,
       inclusiveOut: String = null, shards: Int = 0): DataFrame = {
+    requireLong(df, valCol, "prefixMax")
     val n =
       if (shards > 0) shards
       else defaultShards(df)
@@ -195,9 +211,9 @@ object GlobalRank {
     * the exclusive running sum of whole-shard totals (a ≤`shards`-row
     * metadata window) broadcast back as each shard's carry-in.
     *
-    * REQUIREMENT: `order` must be a TOTAL order (include a unique
+    * REQUIREMENTS: `order` must be a TOTAL order (include a unique
     * tiebreaker) — a ROWS frame over tied keys is otherwise
-    * nondeterministic across retries. */
+    * nondeterministic across retries; `valCol` must be LongType. */
   def prefixSum(df: DataFrame, order: Seq[Column], valCol: Column,
       outCol: String, shards: Int = 0): DataFrame =
     prefixSums(df, order, Seq(valCol -> outCol), shards)
@@ -210,9 +226,11 @@ object GlobalRank {
     * column ride the same ≤`shards`-row metadata aggregate and one
     * broadcast join carries every carry-in back. N columns through
     * separate [[prefixSum]] calls would pay N range exchanges and N
-    * persists for the same answer. */
+    * persists for the same answer. Same REQUIREMENTS as [[prefixSum]],
+    * for every value column. */
   def prefixSums(df: DataFrame, order: Seq[Column],
       valCols: Seq[(Column, String)], shards: Int = 0): DataFrame = {
+    valCols.foreach { case (v, _) => requireLong(df, v, "prefixSums") }
     val n =
       if (shards > 0) shards
       else defaultShards(df)

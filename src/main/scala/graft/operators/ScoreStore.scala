@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** Incremental model-inference materialization — the digest-synced-store
   * discipline ([[graft.dedup.IncrementalDedup.syncSigStore]], q200/q256)
   * applied to MODEL SCORES.
@@ -62,7 +64,7 @@ object ScoreStore {
       fs.delete(new Path(storeDir(corpusDir, sidecar), s"$partPrefix$b"), true); ()
     }
     current.filter { case (b, d) => !prev.get(b).contains(d) }.keys.foreach { b =>
-      val slice = spark.read.parquet(s"$corpusDir/$partPrefix$b")
+      val slice = Tables.read(spark, s"$corpusDir/$partPrefix$b")
       score(slice).write.mode("overwrite")
         .parquet(s"${storeDir(corpusDir, sidecar)}/$partPrefix$b")
     }
@@ -78,6 +80,6 @@ object ScoreStore {
   def read(spark: SparkSession, corpusDir: String,
       sidecar: String = "_scores"): DataFrame = {
     require(sidecar.startsWith("_"), s"sidecar must be underscore-prefixed: $sidecar")
-    spark.read.parquet(storeDir(corpusDir, sidecar))
+    Tables.read(spark, storeDir(corpusDir, sidecar))
   }
 }

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Committed (cross-JVM) residual-IVFPQ index — the q75 bucketed-layout
   * amortization applied to vector search.
   *
@@ -254,7 +256,7 @@ object IvfPqIndex {
     // are (id, cell, codes) — compact by design), an append-time cost,
     // not a search-time one.
     val committedIds = codeSegments(spark, idx)
-      .map(s => spark.read.parquet(s).select(col("neighbor_id")))
+      .map(s => Tables.read(spark, s).select(col("neighbor_id")))
       .reduce(_.unionByName(_))
     val fresh = encoded.join(committedIds, Seq("neighbor_id"), "left_anti")
     // An empty delta (nothing new today) must not commit: a segment with
@@ -303,7 +305,7 @@ object IvfPqIndex {
     val fresh = tombstoneSegments(spark, idx) match {
       case Seq() => batch
       case segs =>
-        val existing = segs.map(s => spark.read.parquet(s)).reduce(_.unionByName(_))
+        val existing = segs.map(s => Tables.read(spark, s)).reduce(_.unionByName(_))
         batch.join(existing, Seq("neighbor_id"), "left_anti")
     }
     // One count pass over the persisted remainder sizes the write's
@@ -378,7 +380,7 @@ object IvfPqIndex {
 
   /** Load the sidecar (one-row collect) and wrap the layout. */
   private def load(spark: SparkSession, loc: String, p: Params): Committed = {
-    val row = spark.read.parquet(s"$loc/meta").head()
+    val row = Tables.read(spark, s"$loc/meta").head()
     // Nested parquet arrays deserialize as mutable ArraySeq — type the
     // inner levels as collection.Seq, not immutable.Seq.
     val cellMatrix = row.getSeq[scala.collection.Seq[Double]](row.fieldIndex("cell_matrix"))
@@ -416,7 +418,7 @@ object IvfPqIndex {
     // discovery across the different roots); the probed-cell filter
     // pushes through the Union into every segment's partition pruning.
     val live = codeSegments(spark, idx)
-      .map(seg => spark.read.parquet(seg))
+      .map(seg => Tables.read(spark, seg))
       .reduce(_.unionByName(_))
       .where(col("cell").isin(probed.map(Integer.valueOf): _*))
     // Tombstone-deleted vectors (see [[delete]]) never become candidates:
@@ -427,7 +429,7 @@ object IvfPqIndex {
     val codes = (tombstoneSegments(spark, idx) match {
       case Seq() => live
       case segs =>
-        val tombs = segs.map(s => spark.read.parquet(s)).reduce(_.unionByName(_))
+        val tombs = segs.map(s => Tables.read(spark, s)).reduce(_.unionByName(_))
         live.join(tombs, Seq("neighbor_id"), "left_anti")
     }).select(col("neighbor_id"), col("cell"),
         transform(col("codes"),

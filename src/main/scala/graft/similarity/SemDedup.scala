@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.IvfFunctions.nearest_cells
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -236,7 +237,7 @@ object SemDedup {
         val dropPrior =
           if (b == 0) wave.limit(0).select(col("id"))
           else wave.join(
-              spark.read.parquet(storeDir).where(col("batch_id") < b)
+              Tables.read(spark, storeDir).where(col("batch_id") < b)
                 .select(col("cell"), col("v").as("vp")),
               Seq("cell"))
             .filter(cosine_sim(col("v"), col("vp")) >= tau)
@@ -249,7 +250,7 @@ object SemDedup {
         wave.join(dropPrior.unionByName(dropWithin).distinct(), Seq("id"), "left_anti")
           .write.mode("overwrite").parquet(s"$storeDir/batch_id=$b")
       }
-      spark.read.parquet(storeDir)
+      Tables.read(spark, storeDir)
         .select(col("batch_id").cast("long").as("batch"),
           col("id").as(idCol), col("cell"))
         .orderBy(col("batch"), col(idCol))

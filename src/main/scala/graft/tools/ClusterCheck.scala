@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Multi-executor evidence: everything else in the repo runs `local[n]`,
   * where driver and executors share one JVM — a closure that accidentally
   * captures driver-side mutable state, a non-serializable expression, or
@@ -186,7 +188,7 @@ object ClusterCheck {
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$sig/_base/_SUCCESS")) &&
       graft.dedup.IncrementalDedup.readStateFile(fs, sig, "_base_manifest").nonEmpty,
       "[clustercheck] torn store did not self-heal after re-ingest")
-    spark.read.parquet(corpus).where(col("batch_id") >= 0)
+    Tables.read(spark, corpus).where(col("batch_id") >= 0)
       .select(col("batch_id").cast("long"), col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
   }

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
+
 /** K5 Hive-catalog parity check (reference README.md:363–367, 394–410: the
   * reference lands external tables in a thrift Hive metastore for Presto).
   * The main query surface uses Spark's built-in catalog — functionally
@@ -46,7 +48,7 @@ object HiveCheck {
         s"""CREATE EXTERNAL TABLE lineitem_ext
            |USING parquet LOCATION '$sfDir/lineitem.parquet'""".stripMargin)
       val extCount = spark.sql("SELECT COUNT(*) FROM lineitem_ext").head().getLong(0)
-      val directCount = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      val directCount = Tables.read(spark, s"$sfDir/lineitem.parquet").count()
       require(extCount == directCount && extCount > 0,
         s"external table count $extCount != direct $directCount")
       println(s"[hivecheck] external table through HiveExternalCatalog: $extCount rows OK")

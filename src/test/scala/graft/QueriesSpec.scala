@@ -3345,6 +3345,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(expected.drop(1).forall(_._4 > 0L), s"epochs 1+ must move shards: $expected")
   }
 
+  test("q284 rebuild in the same session is a memo hit: no rowNumber job, no new persisted frame") {
+    // A fresh session so the (session, dir) memo starts empty whatever ran before.
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    graft.analytics.PipelineQueries.epochSchedule(s, TestSpark.SfDir)
+    val before = sc.getPersistentRDDs.keySet
+    val (_, jobs) = TestSpark.jobsDuring(s)(
+      graft.analytics.PipelineQueries.epochSchedule(s, TestSpark.SfDir))
+    assert(jobs == 0, s"the second q284 build launched $jobs jobs")
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the second q284 build persisted $added")
+  }
+
   test("q285 normalization: variants collapse onto their originals; clean source untouched") {
     import spark.implicits._
     // ids 0 and 7 re-enter as uppercased double-spaced variants; id 3 is clean.

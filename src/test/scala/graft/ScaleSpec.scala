@@ -346,6 +346,47 @@ class ScaleSpec extends AnyFunSuite {
     assert(plan.contains("2147483648"), s"packed key expected in plan:\n$plan")
   }
 
+  test("q177 packing gate: a negative node id turns packing off; counts match the 2-col closure") {
+    import spark.implicits._
+    // The K4+K3+pendant graph with node 6 renamed -1: every id is below
+    // 2^31, so a max-only gate would pack, and x·2^31 + (−1) aliases the
+    // key of pair (x − 1, 2^31 − 1).
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (2L, 5L), (3L, 5L), (3L, -1L)).toDF("u", "v")
+    val op = Seq.empty[(Long, Long)].toDF("ok", "pk")
+    val gated = graft.analytics.PipelineQueries
+      .triangleCensusOf(op, memoEdges = Some(edges), adjMaxEdges = 0L)
+    val plan = gated.queryExecution.executedPlan.toString
+    assert(!plan.contains("2147483648"), s"a negative id must keep the 2-col closure:\n$plan")
+    val plain = graft.analytics.PipelineQueries
+      .triangleCensusOf(op, memoEdges = Some(edges), adjMaxEdges = 0L, packIds = Some(false))
+    assert(gated.collect().toSeq == plain.collect().toSeq)
+    assert(gated.head().getLong(3) == 5L, gated.collect().mkString)
+    // Ids in [0, 2^31) still pack.
+    val nonNeg = edges.selectExpr("u", "IF(v < 0, 6L, v) AS v")
+    assert(graft.analytics.PipelineQueries
+      .triangleCensusOf(op, memoEdges = Some(nonNeg), adjMaxEdges = 0L)
+      .queryExecution.executedPlan.toString.contains("2147483648"))
+  }
+
+  test("GlobalRank: a non-LongType value column fails up front, naming the column") {
+    val df = spark.range(0L, 100L).selectExpr("id", "CAST(id % 7 AS INT) AS v")
+    val pm = intercept[IllegalArgumentException](graft.operators.GlobalRank
+      .prefixMax(df, col("id"), col("v"), "pm", shards = 4))
+    assert(pm.getMessage.contains("v") && pm.getMessage.contains("LongType"), pm.getMessage)
+    val ps = intercept[IllegalArgumentException](graft.operators.GlobalRank
+      .prefixSums(df, Seq(col("id").asc), Seq(col("id") -> "p0", col("v") -> "p1"), shards = 4))
+    assert(ps.getMessage.contains("v") && ps.getMessage.contains("IntegerType"), ps.getMessage)
+  }
+
+  test("HyperBall register merge rejects a register vector of the wrong width") {
+    val agg = new graft.graph.RegMaxAggregator(4)
+    val buf = agg.reduce(agg.zero, Array[Byte](1, 2, 3, 4))
+    val e = intercept[IllegalArgumentException](agg.reduce(buf, Array[Byte](9, 9, 9, 9, 9)))
+    assert(e.getMessage.contains("m=4"), e.getMessage)
+    assert(agg.reduce(buf, Array[Byte](0, 5, 0, 5)).toSeq == Seq[Byte](1, 5, 3, 5))
+  }
+
   test("partitioned layout prunes directories at planning time") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val events = Tables.events(spark, TestSpark.SfDir)
